@@ -48,8 +48,54 @@ def pack(values: np.ndarray, bit_width: int) -> bytes:
     return np.packbits(bits[:, :bit_width].reshape(-1), bitorder="little").tobytes()
 
 
+_MASKS = np.array([(1 << w) - 1 for w in range(MAX_WIDTH + 1)], dtype=np.uint64)
+_GATHER_STEP = 1 << 15  # values per gather step: bounds the int64 temporaries
+
+
+def as_bytes(buf: bytes | bytearray | memoryview | np.ndarray) -> bytes:
+    """``buf`` as ``bytes``, so header walks index plain Python ints."""
+    return buf.tobytes() if isinstance(buf, np.ndarray) else bytes(buf)
+
+
+def gather(buf: bytes | np.ndarray, bitpos: np.ndarray, width) -> np.ndarray:
+    """Word-level bit unpacking -> uint64 array: value ``i`` is the
+    ``width[i]``-bit LSB-first field starting at bit ``bitpos[i]`` of ``buf``
+    (``width`` is one int for all values, or one per value).
+
+    Each value costs one unaligned little-endian 8-byte load at its field's
+    first byte, a shift by the field's bit offset within that byte and a
+    mask -- the numpy form of the reference's word-at-a-time ``unpack32``
+    (``src/util/bit_packing.rs:29-64``). A field wider than 56 bits can
+    straddle the loaded word, so those alone take a second load of the next
+    8 bytes. Loads past the end of ``buf`` read zero padding, never an
+    error: callers check their stream's end byte before gathering.
+    """
+    raw = np.frombuffer(buf, dtype=np.uint8) if not isinstance(buf, np.ndarray) else buf
+    padded = np.zeros(raw.size + 16, dtype=np.uint8)
+    padded[: raw.size] = raw
+    # word j = bytes padded[j:j+8]: a uint64 view with a 1-byte stride
+    words = np.ndarray((raw.size + 9,), dtype="<u8", buffer=padded, strides=(1,))
+    per_value = np.ndim(width) > 0
+    out = np.empty(bitpos.size, dtype=np.uint64)
+    for s in range(0, bitpos.size, _GATHER_STEP):
+        bp = bitpos[s : s + _GATHER_STEP]
+        w = width[s : s + _GATHER_STEP] if per_value else width
+        byte = bp >> 3
+        shift = (bp & 7).astype(np.uint64)
+        v = words[byte]
+        v >>= shift
+        wide = np.flatnonzero(np.broadcast_to(np.greater(w, 56), bp.shape))
+        if wide.size:  # the bits above 64 - shift come from the next word
+            v[wide] |= (words[byte[wide] + 8] << 1) << (63 - shift[wide])
+        v &= _MASKS[w]
+        out[s : s + bp.size] = v
+    return out
+
+
 def unpack(buf: bytes | np.ndarray, bit_width: int, n: int) -> np.ndarray:
-    """Inverse of :func:`pack`; returns uint64 array of length ``n``."""
+    """Inverse of :func:`pack`; returns uint64 array of length ``n``.
+
+    One :func:`gather` at the fixed bit offsets ``i * bit_width``."""
     if n == 0:
         return np.empty(0, dtype=np.uint64)
     if bit_width == 0:
@@ -58,12 +104,7 @@ def unpack(buf: bytes | np.ndarray, bit_width: int, n: int) -> np.ndarray:
     nbits = n * bit_width
     if raw.size * 8 < nbits:
         raise ValueError(f"buffer too small: {raw.size} bytes for {nbits} bits")
-    dt = _store_dtype(bit_width)
-    bits = np.unpackbits(raw[: (nbits + 7) // 8], bitorder="little", count=nbits)
-    out_bits = np.zeros((n, 8 * dt.itemsize), dtype=np.uint8)
-    out_bits[:, :bit_width] = bits.reshape(n, bit_width)
-    le_bytes = np.packbits(out_bits, axis=1, bitorder="little")
-    return le_bytes.reshape(-1).view(dt).astype(np.uint64)
+    return gather(raw, np.arange(n, dtype=np.int64) * bit_width, bit_width)
 
 
 def num_required_bits(x: int) -> int:
@@ -157,7 +198,7 @@ def zigzag_decode(value: int) -> int:
 def orbit_positions(nxt: np.ndarray, n: int) -> np.ndarray:
     """Positions visited by the walk ``0 -> nxt[0] -> ...`` while < n, via
     pointer doubling — O(n log n) vectorized resolution of a sequential
-    jump chain (used by the RLE header parser and FSST's greedy matcher)."""
+    jump chain (used by FSST's greedy matcher)."""
     if n == 0:
         return np.empty(0, dtype=np.int64)
     visited = np.zeros(n + 1, dtype=bool)

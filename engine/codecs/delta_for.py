@@ -17,10 +17,16 @@ Layout (reference ``DeltaBitPackEncoder``, ``src/encodings/encoding.rs:506-652``
 - decode is cumulative wrapping add (``src/encodings/decoding.rs:535-572``),
   done as one uint64 ``np.cumsum`` mod 2**32 / 2**64.
 
-Fully vectorized across blocks: per-block mins/widths come from one reshape,
-miniblock payloads are packed in batches *grouped by bit width* (<= 65
-vectorized pack calls regardless of input size), and the variable-length
-output is assembled with one offset-scatter.
+Encode is fully vectorized across blocks: per-block mins/widths come from
+one reshape, miniblock payloads are packed in batches *grouped by bit width*
+(<= 65 vectorized pack calls regardless of input size), and the
+variable-length output is assembled with one offset-scatter.
+
+Decode walks the block headers over ``bytes`` with plain Python ints (one
+short step per block), which also delimits the stream and checks that it
+is not truncated. Every miniblock's deltas then come out of ONE
+variable-width :func:`bitpack.gather` -- a per-value bit offset and width --
+followed by one broadcast add of the block mins and the cumulative sum.
 """
 
 from __future__ import annotations
@@ -144,24 +150,30 @@ def decode_stream(
     bytes), so the consumer needs the end position — the stream is only
     delimited by walking its own block headers, which the layout pass here
     does anyway. Trailing bytes after the last block are ignored."""
-    raw = np.frombuffer(buf, dtype=np.uint8) if not isinstance(buf, np.ndarray) else buf
-    return _decode_impl(raw, None, dtype)
+    return _decode_impl(bitpack.as_bytes(buf), None, dtype)
 
 
 def decode(buf: bytes | np.ndarray, n: int | None = None, dtype: str = "int32") -> np.ndarray:
-    raw = np.frombuffer(buf, dtype=np.uint8) if not isinstance(buf, np.ndarray) else buf
-    return _decode_impl(raw, n, dtype)[0]
+    return _decode_impl(bitpack.as_bytes(buf), n, dtype)[0]
 
 
-def _decode_impl(
-    raw: np.ndarray, n: int | None, dtype: str
-) -> tuple[np.ndarray, int]:
+def _truncated(what: str, need: int, have: int) -> ValueError:
+    return ValueError(
+        f"DELTA_BINARY_PACKED stream truncated: {what} needs {need} bytes, "
+        f"buffer has {have}"
+    )
+
+
+def _decode_impl(data: bytes, n: int | None, dtype: str) -> tuple[np.ndarray, int]:
     utype, itype, nbits = _I32[dtype]
     pos = 0
-    block_size, pos = bitpack.uleb128_decode(raw, pos)
-    num_mini, pos = bitpack.uleb128_decode(raw, pos)
-    total, pos = bitpack.uleb128_decode(raw, pos)
-    zz_first, pos = bitpack.uleb128_decode(raw, pos)
+    try:
+        block_size, pos = bitpack.uleb128_decode(data, pos)
+        num_mini, pos = bitpack.uleb128_decode(data, pos)
+        total, pos = bitpack.uleb128_decode(data, pos)
+        zz_first, pos = bitpack.uleb128_decode(data, pos)
+    except IndexError:
+        raise _truncated("the header", pos + 1, len(data)) from None
     first = bitpack.zigzag_decode(zz_first)
     if n is None:
         n = total
@@ -169,57 +181,66 @@ def _decode_impl(
         # consumed is exact only when the stream itself is empty (total=0);
         # an n=0 truncating read of a non-empty stream doesn't walk blocks
         return np.empty(0, dtype=itype), pos
+    if not num_mini or block_size % num_mini or (block_size // num_mini) % 8:
+        raise ValueError(
+            f"DELTA_BINARY_PACKED header: block of {block_size} values cannot "
+            f"split into {num_mini} whole-byte miniblocks"
+        )
     mini_size = block_size // num_mini
     mask = (1 << nbits) - 1
 
     nd = total - 1
     nblocks = (nd + block_size - 1) // block_size
+    n_mini = (nd + mini_size - 1) // mini_size  # miniblocks holding deltas
 
-    # pass 1: walk per-block headers (cheap integer parses), record layout
-    mins = np.empty(nblocks, dtype=np.int64)
-    widths = np.empty((nblocks, num_mini), dtype=np.uint8)
-    mb_off = np.empty((nblocks, num_mini), dtype=np.int64)
-    got = 0
-    for b in range(nblocks):
-        zz, pos = bitpack.uleb128_decode(raw, pos)
-        mins[b] = bitpack.zigzag_decode(zz)
-        widths[b] = raw[pos : pos + num_mini]
-        pos += num_mini
-        for m in range(num_mini):
-            has = got < nd
-            mb_off[b, m] = pos if has else -1
-            if has:
-                pos += int(widths[b, m]) * mini_size // 8
-                got += mini_size
-    got = min(got, nd)
+    # pass 1: walk the block headers as plain ints; only miniblocks that
+    # hold deltas have a payload (the last block's empty ones do not)
+    zz_mins = []
+    widths = bytearray()
+    starts = []  # byte offset of each block's first miniblock
+    try:
+        for b in range(nblocks):
+            zz = data[pos]
+            if zz & 0x80:
+                zz, pos = bitpack.uleb128_decode(data, pos)
+            else:
+                pos += 1
+            zz_mins.append(zz)
+            ws = data[pos : pos + num_mini]
+            widths += ws
+            pos += num_mini
+            starts.append(pos)
+            pos += sum(ws[: n_mini - b * num_mini]) * mini_size // 8
+    except IndexError:
+        raise _truncated("a block header", pos + 1, len(data)) from None
+    if pos > len(data):
+        raise _truncated(f"{total} values", pos, len(data))
 
-    # pass 2: unpack miniblocks grouped by width
-    deltas = np.empty(nblocks * block_size, dtype=np.uint64)
-    flat_w = widths.reshape(-1)
-    flat_off = mb_off.reshape(-1)
-    has = flat_off >= 0
-    for w in np.unique(flat_w[has]):
-        sel = np.flatnonzero(has & (flat_w == w))
-        w = int(w)
-        if w == 0:
-            dst = (sel[:, None] * mini_size + np.arange(mini_size)[None, :]).reshape(-1)
-            deltas[dst] = 0
-            continue
-        nb = w * mini_size // 8
-        src = flat_off[sel][:, None] + np.arange(nb)[None, :]
-        vals = bitpack.unpack(raw[src.reshape(-1)], w, len(sel) * mini_size)
-        dst = (sel[:, None] * mini_size + np.arange(mini_size)[None, :]).reshape(-1)
-        deltas[dst] = vals
-    # add per-block min_delta (wrapped) and truncate padding
+    # pass 2: one variable-width gather over every miniblock; the empty
+    # trailing miniblocks become width 0 at the stream's end
+    w = np.frombuffer(widths, dtype=np.uint8)
+    w[n_mini:] = 0
+    if w.size and int(w.max()) > nbits:
+        raise ValueError(f"DELTA_BINARY_PACKED miniblock bit width {int(w.max())} > {nbits}")
+    w64 = w.astype(np.int64)
+    mb_bytes = w64.reshape(nblocks, num_mini) * (mini_size // 8)
+    mb_off = np.asarray(starts, dtype=np.int64)[:, None] + np.cumsum(mb_bytes, axis=1) - mb_bytes
+    bitpos = mb_off.reshape(-1, 1) * 8 + w64[:, None] * np.arange(mini_size)
+    deltas = bitpack.gather(data, bitpos.reshape(-1), np.repeat(w, mini_size))
+    del bitpos  # freed before the cumsum's arrays
     deltas = deltas.reshape(nblocks, block_size)
-    deltas = (deltas + mins.view(np.uint64)[:, None]) & np.uint64(mask)
-    deltas = deltas.reshape(-1)[:nd]
+    # add per-block min_delta (wrapped) and truncate padding
+    zz = np.array(zz_mins, dtype=np.uint64)
+    mins = (zz >> np.uint64(1)) ^ (np.uint64(0) - (zz & np.uint64(1)))
+    deltas += mins[:, None]
+    deltas &= np.uint64(mask)
 
     # cumulative wrapping add in uint64 (exact mod-2**nbits arithmetic)
     acc = np.empty(total, dtype=np.uint64)
     acc[0] = np.uint64(first & mask)
-    acc[1:] = np.cumsum(deltas, dtype=np.uint64)
-    acc[1:] = (acc[1:] + acc[0]) & np.uint64(mask)
+    np.cumsum(deltas.reshape(-1)[:nd], dtype=np.uint64, out=acc[1:])
+    acc[1:] += acc[0]
+    acc &= np.uint64(mask)
     if nbits == 32:
         result = acc.astype(np.uint32).view(np.int32)
     else:

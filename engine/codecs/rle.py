@@ -121,76 +121,72 @@ def decode(buf: bytes | np.ndarray, bit_width: int, n: int) -> np.ndarray:
     """Decode ``n`` values from hybrid-encoded ``buf`` -> uint64 array.
 
     Batch equivalent of the reference's ``RleDecoder::get_batch``
-    (``src/encodings/rle.rs:398-434``): each run materializes as one
-    vectorized numpy op; trailing zero-padding beyond ``n`` is dropped.
+    (``src/encodings/rle.rs:398-434``): the run headers are walked as plain
+    ints, recording each run's header and payload offset; then the RLE
+    values come out of one :func:`bitpack.gather` at those offsets and one
+    ``np.repeat``, and all bit-packed values out of one more gather.
+    Trailing zero-padding beyond ``n`` is dropped.
     """
     if n == 0:
         return np.empty(0, dtype=np.uint64)
-    raw = np.frombuffer(buf, dtype=np.uint8) if not isinstance(buf, np.ndarray) else buf
+    data = bitpack.as_bytes(buf)
     vbytes = (bit_width + 7) // 8
 
-    # pass 1: walk run headers (scalar parses, one per run — bounded by run
-    # count; a fully vectorized chain resolution was tried and lost: it must
-    # consider every byte position while this loop touches only real headers)
-    rle_vals = []
-    rle_counts = []
-    rle_outs = []
-    bp_slices = []
-    bp_counts = []
-    bp_outs = []
+    # pass 1: walk the run headers (one scalar step per run)
+    headers = []
+    offsets = []  # byte offset of each run's payload
     got = 0
     pos = 0
-    while got < n:
-        header, pos = bitpack.uleb128_decode(raw, pos)
-        if header & 1:  # bit-packed run
-            count = (header >> 1) * 8
-            nbytes = count * bit_width // 8
-            bp_slices.append((pos, nbytes))
-            bp_counts.append(count)
-            bp_outs.append(got)
-            pos += nbytes
-        else:  # rle run
-            count = header >> 1
-            value = (
-                int.from_bytes(raw[pos : pos + vbytes].tobytes(), "little")
-                if vbytes
-                else 0
-            )
-            pos += vbytes
-            rle_vals.append(value)
-            rle_counts.append(count)
-            rle_outs.append(got)
-        got += count
+    try:
+        while got < n:
+            header = data[pos]
+            if header & 0x80:
+                header, pos = bitpack.uleb128_decode(data, pos)
+            else:
+                pos += 1
+            headers.append(header)
+            offsets.append(pos)
+            if header & 1:  # bit-packed run of (header >> 1) groups of 8
+                got += (header >> 1) * 8
+                pos += (header >> 1) * bit_width
+            else:  # rle run: one value in vbytes LE bytes
+                got += header >> 1
+                pos += vbytes
+    except IndexError:
+        raise ValueError(
+            f"RLE/bit-packed hybrid stream truncated: run header needs {pos + 1} "
+            f"bytes, buffer has {len(data)}"
+        ) from None
+    if pos > len(data):
+        raise ValueError(
+            f"RLE/bit-packed hybrid stream truncated: {n} values need {pos} "
+            f"bytes, buffer has {len(data)}"
+        )
 
-    # pass 2: batch materialization (the batch analogue of the reference's
-    # get_batch, src/encodings/rle.rs:398-434). Runs cover contiguous output
-    # intervals, so one interval mask (bincount + cumsum) routes a single
-    # np.repeat of RLE values and a single batch unpack of all bit-packed
-    # bytes into place — no per-run ops, no explicit index arrays.
-    out = np.empty(got, dtype=np.uint64)
-    if len(rle_vals) and bp_counts:
-        starts = np.asarray(rle_outs, dtype=np.int64)
-        counts = np.asarray(rle_counts, dtype=np.int64)
-        diff = np.bincount(starts, minlength=got + 1) - np.bincount(
-            starts + counts, minlength=got + 1
+    # pass 2: materialize; the last run is cut to end at value n
+    offs = np.asarray(offsets, dtype=np.int64)
+    headers = np.asarray(headers, dtype=np.int64)
+    packed = (headers & 1).astype(bool)
+    counts = headers >> 1
+    counts[packed] *= 8
+    counts[-1] -= got - n
+    if packed.all():
+        return _unpack_runs(data, offs, counts, bit_width)
+    out = np.repeat(bitpack.gather(data, offs * 8, 8 * vbytes), counts)
+    if packed.any():
+        out[np.repeat(packed, counts)] = _unpack_runs(
+            data, offs[packed], counts[packed], bit_width
         )
-        mask = np.cumsum(diff)[:got] > 0
-        out[mask] = np.repeat(np.asarray(rle_vals, dtype=np.uint64), counts)
-        allbytes = np.concatenate([raw[s : s + nb] for s, nb in bp_slices])
-        out[~mask] = bitpack.unpack(allbytes, bit_width, int(sum(bp_counts)))
-    elif len(rle_vals):
-        out = np.repeat(
-            np.asarray(rle_vals, dtype=np.uint64),
-            np.asarray(rle_counts, dtype=np.int64),
-        )
-    elif bp_counts:
-        if len(bp_slices) == 1:
-            s, nb = bp_slices[0]
-            allbytes = raw[s : s + nb]
-        else:
-            allbytes = np.concatenate([raw[s : s + nb] for s, nb in bp_slices])
-        out = bitpack.unpack(allbytes, bit_width, int(sum(bp_counts)))
-    return out[:n]
+    return out
+
+
+def _unpack_runs(data: bytes, offs: np.ndarray, counts: np.ndarray, bit_width: int):
+    """Values of the bit-packed runs whose payloads start at byte ``offs``,
+    ``counts`` values each, as one gather."""
+    first = np.cumsum(counts) - counts  # each run's first value in the output
+    base = offs * 8 - first * bit_width
+    bitpos = np.repeat(base, counts) + np.arange(int(counts.sum())) * bit_width
+    return bitpack.gather(data, bitpos, bit_width)
 
 
 # --- length-prefixed form (levels v1 / boolean RLE value encoding) ---------

@@ -220,6 +220,59 @@ _AGG_SCHEMA = StructType(
     ]
 )
 
+_AGG_INPUTS = ("tokens", "n_tok", "doc_id")
+
+
+def _agg_group(tbl):
+    """One chunk's ``tokens``/``n_tok``/``doc_id`` rows (a pa.Table) -> its
+    per-document aggregate rows (``_AGG_SCHEMA``)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    _check_arrow_group_consistent(tbl)
+    blobs = dict(
+        zip(tbl.column("column").to_pylist(), tbl.column("payload").to_pylist())
+    )
+    missing = [c for c in _AGG_INPUTS if c not in blobs]
+    if missing:
+        cid = tbl.column("chunk_id")[0].as_py() if tbl.num_rows else None
+        raise ValueError(
+            f"chunk {cid!r} incomplete in partition (no {'/'.join(missing)} "
+            "row) — input not co-located; call with colocated=False"
+        )
+    lens = chunk.decode_chunk(blobs["n_tok"]).astype(np.int64)
+    flat = np.asarray(chunk.decode_chunk(blobs["tokens"])).astype(np.int64)
+    if int(lens.sum()) != flat.size:
+        raise ValueError(
+            f"list chunk lengths sum to {int(lens.sum())} but "
+            f"{flat.size} elements present"
+        )
+    doc_ids = _string_array_from_flat(*chunk.decode_chunk(blobs["doc_id"]))
+    nz = lens > 0
+    if not nz.all():
+        doc_ids = doc_ids.filter(pa.array(nz))
+        lens = lens[nz]
+    if lens.size:
+        starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
+        sums = np.add.reduceat(flat, starts)
+        mins = np.minimum.reduceat(flat, starts)
+        maxs = np.maximum.reduceat(flat, starts)
+        pos = np.arange(flat.size, dtype=np.int64) - np.repeat(starts, lens) + 1
+        wsums = np.add.reduceat(flat * pos, starts)
+    else:
+        sums = mins = maxs = wsums = np.empty(0, np.int64)
+    return pa.Table.from_arrays(
+        [
+            doc_ids,
+            pa.array(lens),
+            pa.array(sums),
+            pa.array(mins),
+            pa.array(maxs),
+            pa.array(wsums),
+        ],
+        names=_AGG_SCHEMA.fieldNames(),
+    ).cast(to_arrow_schema(_AGG_SCHEMA))
+
 
 def decode_tokens_agg(chunks_df: DataFrame, colocated: bool = False) -> DataFrame:
     """Decode + per-document aggregate in ONE pass: ``(doc_id, n_tok,
@@ -248,57 +301,9 @@ def decode_tokens_agg(chunks_df: DataFrame, colocated: bool = False) -> DataFram
     in a single stage. Use the default for chunks read back from storage
     or otherwise re-partitioned.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(_AGG_SCHEMA)
-    names = [f.name for f in _AGG_SCHEMA.fields]
-
-    def agg_group(tbl):
-        import pyarrow as pa
-
-        _check_arrow_group_consistent(tbl)
-        blobs = dict(
-            zip(tbl.column("column").to_pylist(), tbl.column("payload").to_pylist())
-        )
-        lens = chunk.decode_chunk(blobs["n_tok"]).astype(np.int64)
-        flat = np.asarray(chunk.decode_chunk(blobs["tokens"])).astype(np.int64)
-        if int(lens.sum()) != flat.size:
-            raise ValueError(
-                f"list chunk lengths sum to {int(lens.sum())} but "
-                f"{flat.size} elements present"
-            )
-        doc_ids = _string_array_from_flat(*chunk.decode_chunk(blobs["doc_id"]))
-        nz = lens > 0
-        if not nz.all():
-            doc_ids = doc_ids.filter(pa.array(nz))
-            lens = lens[nz]
-        if lens.size:
-            starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            sums = np.add.reduceat(flat, starts)
-            mins = np.minimum.reduceat(flat, starts)
-            maxs = np.maximum.reduceat(flat, starts)
-            pos = np.arange(flat.size, dtype=np.int64) - np.repeat(starts, lens) + 1
-            wsums = np.add.reduceat(flat * pos, starts)
-        else:
-            sums = mins = maxs = wsums = np.empty(0, np.int64)
-        return pa.Table.from_arrays(
-            [
-                doc_ids,
-                pa.array(lens),
-                pa.array(sums),
-                pa.array(mins),
-                pa.array(maxs),
-                pa.array(wsums),
-            ],
-            names=names,
-        ).cast(arrow_schema)
-
-    pruned = chunks_df.where(F.col("column").isin(["tokens", "n_tok", "doc_id"]))
+    pruned = chunks_df.where(F.col("column").isin(list(_AGG_INPUTS)))
     if not colocated:
-        return pruned.groupBy("chunk_id").applyInArrow(
-            lambda tbl: agg_group(tbl), _AGG_SCHEMA
-        )
+        return pruned.groupBy("chunk_id").applyInArrow(_agg_group, _AGG_SCHEMA)
 
     from .encode import _chunk_groups
 
@@ -307,7 +312,7 @@ def decode_tokens_agg(chunks_df: DataFrame, colocated: bool = False) -> DataFram
 
         for pending in _chunk_groups(batches):
             tbl = pa.Table.from_batches(pending).combine_chunks()
-            yield from agg_group(tbl).to_batches()
+            yield from _agg_group(tbl).to_batches()
 
     return pruned.mapInArrow(agg_stream, _AGG_SCHEMA)
 

@@ -530,10 +530,11 @@ _FAST_SCALAR_NP = {"int32": np.dtype(np.int32), "int64": np.dtype(np.int64),
                    "bool": np.dtype(bool)}
 
 
-def _one_chunk(tbl, name: str):
+def _one_chunk(tbl, name: str, kind: str = "bytes"):
     """Single contiguous Arrow array for ``tbl[name]`` (the table arrives
-    combine_chunks()ed; >1 chunk means a >2^31-byte column that the frame
-    format requires paging for — same guard as ``flat_from_arrow``)."""
+    combine_chunks()ed; >1 chunk means a column whose 32-bit offsets
+    overflowed, which the frame format requires paging for — same guard as
+    ``flat_from_arrow``)."""
     ca = tbl.column(name)
     if ca.num_chunks == 1:
         return ca.chunk(0)
@@ -541,7 +542,10 @@ def _one_chunk(tbl, name: str):
         import pyarrow as pa
 
         return pa.array([], type=ca.type)
-    raise ValueError("byte-array chunk exceeds 2^31 bytes; page the column")
+    overflow = "2^31 list values" if "list" in kind else "2^31 bytes"
+    raise ValueError(
+        f"column {name!r} ({kind}) exceeds {overflow} in one chunk; page the column"
+    )
 
 
 def _group_is_fast(tbl, columns: dict) -> bool:
@@ -602,7 +606,7 @@ def _encode_group_arrow(
         null_count = 0
         bloom_blob = None
         if kind == "int32_list":
-            arr = _one_chunk(tbl, col)
+            arr = _one_chunk(tbl, col, kind)
             flat = arr.flatten().to_numpy(zero_copy_only=False).astype(
                 np.int32, copy=False
             )
@@ -620,7 +624,7 @@ def _encode_group_arrow(
                 vmin, vmax = int(flat.min()), int(flat.max())
         elif kind in ("int32", "int64", "bool"):
             vals = np.ascontiguousarray(
-                _one_chunk(tbl, col).to_numpy(zero_copy_only=False),
+                _one_chunk(tbl, col, kind).to_numpy(zero_copy_only=False),
                 dtype=_FAST_SCALAR_NP[kind],
             )
             if kind == "bool":
@@ -635,7 +639,7 @@ def _encode_group_arrow(
             if vals.size:
                 vmin, vmax = int(vals.min()), int(vals.max())
         elif kind in ("bytes", "binary"):
-            arr = _one_chunk(tbl, col)
+            arr = _one_chunk(tbl, col, kind)
             null_count = int(arr.null_count)
             if null_count:
                 valid = ~arr.is_null().to_numpy(zero_copy_only=False)

@@ -4,7 +4,9 @@ import pytest
 from engine.codecs import bitpack
 
 
-@pytest.mark.parametrize("width", [1, 2, 3, 5, 7, 8, 12, 16, 20, 24, 31, 32])
+@pytest.mark.parametrize(
+    "width", [1, 2, 3, 5, 7, 8, 12, 16, 20, 24, 31, 32, 33, 48, 56, 57, 63, 64]
+)
 @pytest.mark.parametrize("n", [1, 7, 8, 9, 31, 32, 33, 1000])
 def test_pack_roundtrip(width, n):
     rng = np.random.default_rng(42 + width * 100 + n)
@@ -14,6 +16,24 @@ def test_pack_roundtrip(width, n):
     assert len(buf) == (n * width + 7) // 8
     out = bitpack.unpack(buf, width, n)
     np.testing.assert_array_equal(out, vals)
+
+
+def test_gather_matches_python_bit_slicing():
+    """Per-value widths 0..64 at arbitrary bit offsets, checked against
+    plain Python int slicing of the whole little-endian buffer."""
+    rng = np.random.default_rng(5)
+    buf = rng.integers(0, 256, 64, dtype=np.uint8).tobytes()
+    big = int.from_bytes(buf, "little")
+    widths = rng.integers(0, 65, 500).astype(np.uint8)
+    bitpos = rng.integers(0, len(buf) * 8 - widths.astype(np.int64) + 1)
+    out = bitpack.gather(buf, bitpos, widths)
+    expect = [(big >> int(p)) & ((1 << int(w)) - 1) for p, w in zip(bitpos, widths)]
+    assert out.tolist() == expect
+
+
+def test_unpack_buffer_too_small():
+    with pytest.raises(ValueError, match="buffer too small"):
+        bitpack.unpack(b"\x01\x02", 9, 2)
 
 
 def test_pack_width_zero():

@@ -93,6 +93,42 @@ def test_string_offsets_overflow_guard():
         decode_job._string_array_from_flat(lengths, b"")
 
 
+def test_agg_group_missing_column_row_names_colocation():
+    """decode_tokens_agg(colocated=True) on re-partitioned chunks sees a
+    chunk without all of its tokens/n_tok/doc_id rows: the error must name
+    the chunk and the broken co-location, not raise a bare KeyError."""
+    import pyarrow as pa
+
+    from engine import chunk
+
+    tbl = pa.table(
+        {
+            "chunk_id": ["c7", "c7"],
+            "column": ["n_tok", "doc_id"],
+            "n_docs": [1, 1],
+            "payload": [
+                chunk.encode_chunk(np.array([2], np.int32), "plain"),
+                chunk.encode_chunk(
+                    (np.array([1], np.int64), b"a"), "plain_ba", "bytes"
+                ),
+            ],
+        }
+    )
+    with pytest.raises(ValueError, match="'c7' incomplete in partition.*colocated=False"):
+        decode_job._agg_group(tbl)
+
+
+def test_one_chunk_error_names_column_and_kind():
+    import pyarrow as pa
+
+    tbl = pa.table({"toks": pa.chunked_array([[[1]], [[2]]], pa.list_(pa.int32()))})
+    with pytest.raises(ValueError, match="'toks' \\(int32_list\\) exceeds 2\\^31 list values"):
+        encode_job._one_chunk(tbl, "toks", "int32_list")
+    tbl = pa.table({"doc": pa.chunked_array([["a"], ["b"]])})
+    with pytest.raises(ValueError, match="'doc' \\(bytes\\) exceeds 2\\^31 bytes"):
+        encode_job._one_chunk(tbl, "doc", "bytes")
+
+
 def test_list_int64_object_nulls_stay_exact():
     """Object lists mixing exact big ints with None keep int64 precision:
     Arrow preserves the integers alongside element validity, and the encode

@@ -108,6 +108,41 @@ def test_delta_roundtrip_i64():
     np.testing.assert_array_equal(delta_for.decode(buf, 1000, "int64"), vals)
 
 
+def test_delta_stream_i64_full_range_partial_block_trailing_bytes():
+    """Full-range int64 deltas pack at widths up to 64 (the gather's
+    second-word path); 299 deltas leave the last block with two empty
+    miniblocks; the bytes after the stream are not consumed."""
+    rng = np.random.default_rng(11)
+    i64 = np.iinfo(np.int64)
+    vals = rng.integers(i64.min, i64.max, 300, endpoint=True).astype(np.int64)
+    buf = delta_for.encode(vals, "int64")
+    out, consumed = delta_for.decode_stream(buf + b"\x07\xff\x00", "int64")
+    np.testing.assert_array_equal(out, vals)
+    assert consumed == len(buf)
+
+
+def test_delta_truncated_stream_raises():
+    vals = np.cumsum(np.random.default_rng(2).integers(-50, 900, 300)).astype(np.int32)
+    buf = delta_for.encode(vals, "int32")
+    for k in range(len(buf)):
+        with pytest.raises(ValueError, match="DELTA_BINARY_PACKED stream truncated"):
+            delta_for.decode_stream(buf[:k])
+
+
+def test_delta_miniblock_width_over_type_raises():
+    buf = bytearray(delta_for.encode(np.array([7, 8, 9, 10], np.int32), "int32"))
+    buf[-4] = 33  # first miniblock width byte: past int32
+    with pytest.raises(ValueError, match="bit width 33 > 32"):
+        delta_for.decode_stream(bytes(buf) + bytes(33 * 4))
+
+
+def test_delta_bad_block_header_raises():
+    # block_size 128 in 3 miniblocks, then count 5, first 0
+    buf = bitpack.uleb128_encode(128) + bytes([3, 5, 0])
+    with pytest.raises(ValueError, match="cannot split into 3"):
+        delta_for.decode_stream(buf)
+
+
 def test_delta_header_layout():
     # header := uleb(128) uleb(4) uleb(count) zigzag(first)
     # (src/encodings/encoding.rs:511-533)

@@ -110,3 +110,13 @@ def test_len_prefixed_roundtrip():
     out, consumed = rle.decode_len_prefixed(buf, 2, len(vals))
     assert consumed == len(buf)
     np.testing.assert_array_equal(out, vals)
+
+
+def test_truncated_stream_raises():
+    # RLE runs, bit-packed runs and a zero-padded final group
+    vals = np.concatenate([np.full(20, 3), np.arange(30) % 5, np.full(9, 1), [2, 4, 6]])
+    buf = rle.encode(vals, 3)
+    np.testing.assert_array_equal(rle.decode(buf, 3, vals.size), vals)
+    for k in range(len(buf)):
+        with pytest.raises(ValueError, match="RLE/bit-packed hybrid stream truncated"):
+            rle.decode(buf[:k], 3, vals.size)
